@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from weather_data_pipeline_spark.session import DEFAULT_SF_DIR
 from weather_data_pipeline_spark.sources.tables import load_table, write_bucketed
 
 
@@ -337,7 +338,10 @@ def test_aqe_skew_join_splits_hot_partition_at_runtime(spark):
 
 @pytest.mark.skipif(
     not os.path.isdir("/root/repo/scaledata/sf1.0"),
-    reason="sf1.0 replica not built (tools/bench_scaling.py --build)",
+    reason=(
+        "sf1.0 replica not built (python tools/scale_replicate.py "
+        f"--src {DEFAULT_SF_DIR} --out scaledata/sf1.0 --factor 10)"
+    ),
 )
 def test_ivf_sample_trained_recall_holds_at_replica_scale(spark):
     """Regression guard for the round-10 sample-bounded quantizer training

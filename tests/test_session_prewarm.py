@@ -4,8 +4,8 @@ The pool cold start — fork + numpy/pandas import across up to 32 workers —
 was root-caused (SIM_PROBE.json) as the only source of the historical 3-18 s
 Pandas-UDF first-draw outliers. get_spark now runs the prewarm by default for
 local masters so ANY consumer's first wide python-task query starts from
-steady state, not just the bench. The fresh-process first-draw evidence is
-PREWARM_PROBE.json (captured via get_spark only, no bench warmups).
+steady state. The fresh-process first-draw evidence is PREWARM_PROBE.json
+(captured via get_spark only, no benchmark warmups).
 """
 
 from __future__ import annotations
@@ -27,43 +27,6 @@ def test_get_spark_prewarms_local_session_once(spark):
     assert spark.sparkContext.applicationId in S._PREWARMED
     # once per session: a second explicit call is a no-op
     assert S.prewarm_python_workers(spark) is False
-
-
-# --- first-draw bound (VERDICT r10 #3) --------------------------------------
-# PREWARM_PROBE.json measured the post-prewarm first draw at 2.24x the
-# steady median; these pin the explicit threshold rule so a prewarm
-# regression (like the SPARK_GRAFT_NO_PREWARM bypass the r10 self-review
-# caught) fails red instead of surfacing as bench mystery-outliers later.
-
-
-def test_prewarm_verdict_passes_healthy_probe():
-    # the committed r10 capture shape: first 4.34s, steady ~1.94s (2.24x)
-    v = S.prewarm_first_draw_verdict([4.34, 2.02, 1.94, 1.90, 1.96, 1.92])
-    assert v["passed"] is True
-    assert v["first_over_median"] < 3.0
-    assert v["outliers_3x"] == []
-
-
-def test_prewarm_verdict_fails_cold_pool_first_draw():
-    # the no-prewarm historical shape: first draw 6x steady (pool fork +
-    # numpy/pandas import across 32 workers)
-    v = S.prewarm_first_draw_verdict([11.6, 2.0, 1.9, 1.95, 1.92, 1.9])
-    assert v["passed"] is False
-    assert v["first_over_median"] > 3.0
-
-
-def test_prewarm_verdict_fails_midrun_outlier():
-    # first draw fine, but a later draw spiked 3x — pool respawned or load
-    # arrived; either way not evidence of a healthy prewarm
-    v = S.prewarm_first_draw_verdict([2.1, 1.9, 7.0, 1.95, 1.92, 1.9])
-    assert v["passed"] is False
-    assert v["outliers_3x"] == [7.0]
-
-
-def test_prewarm_verdict_needs_enough_draws():
-    assert S.prewarm_first_draw_verdict([2.0])["passed"] is None
-    assert S.prewarm_first_draw_verdict([2.0, 1.9])["passed"] is None
-    assert S.prewarm_first_draw_verdict([2.0, 0.0, 0.0])["passed"] is None
 
 
 def test_failed_prewarm_is_marked_attempted_and_not_retried():
@@ -92,3 +55,14 @@ def test_failed_prewarm_is_marked_attempted_and_not_retried():
         assert S.prewarm_python_workers(fake) is False
     finally:
         S._PREWARMED.discard(_Ctx.applicationId)
+
+
+def test_resolve_cpus_honors_env(monkeypatch):
+    # SPARK_GRAFT_CPUS=8 must yield local[8]: get_spark builds its master
+    # as f"local[{resolve_cpus()}]", so pinning the resolver pins the
+    # session width a caller asks for
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    assert S.resolve_cpus() == 8
+    assert f"local[{S.resolve_cpus()}]" == "local[8]"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert S.resolve_cpus(4) == 4

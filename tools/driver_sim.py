@@ -8,8 +8,9 @@ set SPARK_GRAFT_CORRECTNESS_OUT to name the file, default
 CORRECTNESS_FULL.json in the repo root. Filtered runs never write it: a
 partial sweep must not masquerade as full-registry evidence."""
 import hashlib, json, sys, os, time
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.chdir(ROOT)
 from pyspark.sql import SparkSession
 import duckdb, pandas as pd, numpy as np
 

@@ -218,21 +218,14 @@ def label_encode(
             F.when(F.size("_ks") <= max_literal_vocab, F.col("_ks")).alias("_ks"),
         )
         by_col = {r["_col"]: (r["_n"], r["_ks"]) for r in fitted.collect()}
-    exprs = {}
+    vocabs = {}
     for c in lit_cols:
         n, vocab = by_col.get(c, (0, None))
-        if vocab is not None:
-            m = F.create_map(
-                *[x for code, k in enumerate(vocab) for x in (F.lit(k), F.lit(code))]
-            )
-            code_col = F.try_element_at(m, F.col(c).cast("string"))
-        elif n > 0:  # over-cap: distributed broadcast-join fallback below
+        if vocab is None and n > 0:  # over-cap: join fallback below
             big_cols.append(c)
-            continue
-        else:  # all-null column: no vocab, everything is "unseen"
-            code_col = F.lit(None).cast("int")
-        exprs[f"{c}_encoded"] = F.coalesce(code_col, F.lit(unseen))
-    out = df.withColumns(exprs)
+        else:  # no row for an all-null column: everything is "unseen"
+            vocabs[c] = vocab or []
+    out = apply_vocab_literals(df, vocabs, unseen=unseen)
     for c in big_cols:
         out = apply_label_encoding(
             out, fit_label_encoding(fit_src, c), c, unseen=unseen, broadcast=False
@@ -244,13 +237,12 @@ def apply_vocab_literals(
     df: DataFrame, by_col: dict, unseen: int = -1
 ) -> DataFrame:
     """Apply caller-collected sorted vocabularies as map-literal lookups —
-    the literal branch of :func:`label_encode`, reusable by callers that
+    the literal branch of :func:`label_encode`, also used by callers that
     fit the vocabularies in their own bounded job (the feature pipeline's
     one-job fit, r12). ``by_col``: {column: sorted distinct values list};
-    an empty list means an all-null column (everything is unseen). Codes,
-    lookup expression (``try_element_at``) and the unseen→−1 fallback are
-    identical to label_encode's literal path; encoded columns are appended
-    in one ``withColumns`` in dict order."""
+    an empty list means an all-null column (everything is unseen). Codes
+    come from ``try_element_at`` with the unseen→−1 fallback; encoded
+    columns are appended in one ``withColumns`` in dict order."""
     exprs = {}
     for c, vocab in by_col.items():
         if vocab:

@@ -98,7 +98,7 @@ _SPREAD_MIN_ROWS_PER_SLOT = 1024
 # real scale the edge set blows past it and the distributed loop runs
 # exactly as before. The threshold rides the row count the loop-input
 # checkpoint already computes, so the decision costs zero extra jobs.
-_CC_LOCAL_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", "100000"))
+_CC_LOCAL_MAX_ROWS = 100_000
 
 
 def _spread_ckpt(out: DataFrame, ids: list, n: int | None = None) -> tuple:

@@ -17,7 +17,6 @@ same IEEE multiply).
 
 from __future__ import annotations
 
-import os
 import threading
 
 from pyspark.sql import Column, DataFrame, Window
@@ -25,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.localrel import literal_df
 
-# --- off-JVM allocation bound + stall probe (VERDICT r08 #2) ---------------
+# --- off-JVM allocation bound (VERDICT r08 #2) ------------------------------
 # The block-pair matmuls were the registry's largest single off-JVM
 # allocations: a 4096x4096 float64 `sims` matrix is 134 MB PER GRID CELL,
 # transiently allocated and freed once per cell in every worker — r8's
@@ -37,57 +36,18 @@ from ..functions.localrel import literal_df
 # thresholds, diagonal masks and pair-local maxima are unchanged — only the
 # transient buffer shape is). 32 MB keeps a worker's peak well under
 # glibc's mmap-churn regime while leaving BLAS enough rows per call.
-_MATMUL_CAP_MB = float(os.environ.get("SPARK_GRAFT_SIM_MATMUL_CAP_MB", "32"))
-_MATMUL_CAP_ELEMS = max(1, int(_MATMUL_CAP_MB * (1 << 20) / 8))
-
-# per-grid-cell instrumentation, env-gated (zero cost when off): each cell
-# appends one JSON line {op, wall, majflt, rss_peak_kb, ...} to a
-# per-worker-pid file so an outlier window can be decomposed into which cells
-# stalled and whether major faults / RSS growth line up with the stall.
-_SIM_PROBE = bool(os.environ.get("SPARK_GRAFT_SIM_PROBE"))
+_MATMUL_CAP_MB = 32
+_MATMUL_CAP_ELEMS = _MATMUL_CAP_MB * (1 << 20) // 8
 
 
 def _chunk_rows(n_cols: int, cap: int | None = None) -> int:
     """Anchor-rows per matmul chunk such that chunk*n_cols stays under the
     allocation cap. Callers inside mapInPandas closures must pass ``cap``
     captured DRIVER-side at operator-call time: workers re-import this
-    module, so the module constant there is the env default, not whatever
-    the driver (or a test monkeypatch) set."""
+    module, so the module constant there is the default, not whatever a
+    test monkeypatch set on the driver."""
     cap = _MATMUL_CAP_ELEMS if cap is None else cap
     return max(1, cap // max(n_cols, 1))
-
-
-def _probe_cell(op: str, wall: float, n_a: int, n_b: int, emitted: int) -> None:
-    if not _SIM_PROBE:
-        return
-    try:
-        import json as _json
-        import resource
-        import time as _time
-
-        ru = resource.getrusage(resource.RUSAGE_SELF)
-        with open(f"/tmp/wdp_sim_probe-{os.getpid()}.jsonl", "a") as fh:
-            fh.write(
-                _json.dumps(
-                    {
-                        "op": op,
-                        "ts": round(_time.time(), 3),
-                        "wall": round(wall, 4),
-                        "n_a": n_a,
-                        "n_b": n_b,
-                        "emitted": emitted,
-                        "majflt": ru.ru_majflt,  # cumulative for the worker
-                        "minflt": ru.ru_minflt,
-                        # ru_maxrss is the worker's LIFETIME PEAK RSS, not
-                        # current RSS (ADVICE r09) — per-cell samples only
-                        # stay flat or grow; the field name says so
-                        "rss_peak_kb": ru.ru_maxrss,
-                    }
-                )
-                + "\n"
-            )
-    except Exception:
-        pass  # the probe must never fail a task
 
 
 def _dot_decimal(a: Column, b: Column) -> Column:
@@ -364,16 +324,12 @@ def cosine_near_dup_pairs(
     cap = _MATMUL_CAP_ELEMS  # captured by value into the worker closure
 
     def gen_pairs(batches):
-        import time as _time
-
         for pdf in batches:
             out_a: list = []
             out_b: list = []
             for blk, blk_b, items, items_b in zip(
                 pdf["blk"], pdf["blk_b"], pdf["items"], pdf["items_b"]
             ):
-                t_cell = _time.perf_counter()
-                cell_emitted = 0
                 ids_a, mat_a = _unpack_block(items)
                 if blk == blk_b:
                     ids_b, mat_b = ids_a, mat_a
@@ -401,14 +357,6 @@ def cosine_near_dup_pairs(
                     # duplicates
                     out_a.append(np.minimum(pa, pb))
                     out_b.append(np.maximum(pa, pb))
-                    cell_emitted += len(pa)
-                _probe_cell(
-                    "cosine_near_dup_pairs",
-                    _time.perf_counter() - t_cell,
-                    len(ids_a),
-                    len(ids_b),
-                    cell_emitted,
-                )
             if out_a:
                 yield pd.DataFrame(
                     {
@@ -600,7 +548,7 @@ def lsh_bucket_topk(
 # product quantizers train on a bounded sample — training cost must be
 # O(cap), only the one-pass assignment/encode scan may grow with the corpus.
 # 16k rows is far past codebook saturation for <=256-centroid quantizers.
-_KMEANS_TRAIN_CAP = int(os.environ.get("SPARK_GRAFT_KMEANS_TRAIN_CAP", "16384"))
+_KMEANS_TRAIN_CAP = 16384
 # upper acceptance factor for the sampled class (ADVICE r10): the value hash
 # keeps whole duplicate-value groups or none, so the kept class is ~cap only
 # IN EXPECTATION over distinct values — past this factor the sample is
@@ -695,8 +643,7 @@ def _train_frame(
 # projection), and one fit costs ~1.8 s WARM at sf0.1 — latency-bound MLlib
 # iteration jobs, not data volume. Session-scoped sharing follows the
 # _trained_suite precedent in plans/queries.py: the first consumer pays the
-# fit (the bench lists both consumers in SESSION_CACHED so a warm re-draw
-# can't masquerade as training-free), later consumers ride it. Single entry
+# fit, later consumers ride it. Single entry
 # (cleared on key change) so dead sessions'/other corpora's JVM-backed
 # models are never pinned — same bound rationale as the ML caches
 # (ADVICE r02). cache_tag=None (library callers, tests) bypasses entirely.
@@ -1425,16 +1372,12 @@ def hard_negatives(
         return np.concatenate(got_a), np.concatenate(got_b)
 
     def gen_cand(batches):
-        import time as _time
-
         for pdf in batches:
             out_id: list = []
             out_neg: list = []
             for blk, blk_b, items, items_b in zip(
                 pdf["blk"], pdf["blk_b"], pdf["items"], pdf["items_b"]
             ):
-                t_cell = _time.perf_counter()
-                cell_emitted = 0
                 ids_a, mat_a = _unpack_block(items)
                 labs_a = _labs(items)
                 na = np.sqrt((mat_a * mat_a).sum(axis=1))
@@ -1442,8 +1385,6 @@ def hard_negatives(
                     a, b = _mine(ids_a, labs_a, mat_a, na, ids_a, labs_a, mat_a, na)
                     out_id.append(a)
                     out_neg.append(b)
-                    cell_emitted += len(a)
-                    n_b = len(ids_a)
                 else:
                     ids_b, mat_b = _unpack_block(items_b)
                     labs_b = _labs(items_b)
@@ -1452,19 +1393,9 @@ def hard_negatives(
                     a, b = _mine(ids_a, labs_a, mat_a, na, ids_b, labs_b, mat_b, nb)
                     out_id.append(a)
                     out_neg.append(b)
-                    cell_emitted += len(a)
                     a, b = _mine(ids_b, labs_b, mat_b, nb, ids_a, labs_a, mat_a, na)
                     out_id.append(a)
                     out_neg.append(b)
-                    cell_emitted += len(a)
-                    n_b = len(ids_b)
-                _probe_cell(
-                    "hard_negatives",
-                    _time.perf_counter() - t_cell,
-                    len(ids_a),
-                    n_b,
-                    cell_emitted,
-                )
             if out_id:
                 yield pd.DataFrame(
                     {

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from ..functions import scalar
 from ..operators import encoding as E
-from ..operators import windows as W
 from . import feature_exprs_sql as FSQL
 
 LAG_COLS = ["temperature", "humidity", "pressure", "wind_speed"]
@@ -42,27 +41,6 @@ FFILL_COLS = ["temperature", "humidity", "pressure", "wind_speed"]
 def weather_window(order_tiebreak: str | None = None):
     order = ["timestamp"] + ([order_tiebreak] if order_tiebreak else [])
     return Window.partitionBy("city").orderBy(*order)
-
-
-def add_lag_features(df: DataFrame) -> DataFrame:
-    """W1 ×20 lags (reference `data_processor.py:86-98`)."""
-    return W.add_lags(df, weather_window(), LAG_COLS, LAGS)
-
-
-def add_rolling_features(df: DataFrame) -> DataFrame:
-    """W3/W4 rolling mean + std with pandas min_periods semantics
-    (reference `data_processor.py:101-116`). exact=True: decimal-accumulated
-    closed forms, so the feature values are independent of accumulation
-    order — identical on 1 core or 1000 executors, and hash-checkable
-    against the pipeline's DuckDB oracle."""
-    w = weather_window()
-    out = W.add_rolling_mean(df, w, LAG_COLS, ROLLING_WINDOW, exact=True)
-    return W.add_rolling_std(out, w, LAG_COLS, ROLLING_WINDOW, min_periods=2, exact=True)
-
-
-def add_pressure_change(df: DataFrame) -> DataFrame:
-    """W5 diff (reference `data_processor.py:151`)."""
-    return W.add_diff(df, weather_window(), "pressure", "pressure_change")
 
 
 def handle_missing_values(
@@ -89,7 +67,7 @@ def handle_missing_values(
     and a city absent from the dict fills null exactly like a left-join
     miss."""
     # SQL-string twins (feature_exprs_sql): same analyzed expressions as
-    # W.ffill_limited_exprs / W.interpolate_linear_exprs at ~one py4j round
+    # windows.ffill_limited_exprs / interpolate_linear_exprs at ~one py4j round
     # trip per column instead of dozens (r11 — construction latency, see
     # the twin module's docstring; parity is test-pinned)
     out = df.withColumn(

@@ -29,9 +29,9 @@ TABLES = (
 
 def resolve_cpus(cpus: int | None = None) -> int:
     """Effective local core count: explicit arg > $SPARK_GRAFT_CPUS >
-    os.cpu_count(). Pure and test-pinnable so the bench artifact's
-    self-description (VERDICT r11 #2) provably matches what get_spark
-    builds — `local[resolve_cpus()]` when no external master is set."""
+    os.cpu_count(). Pure and test-pinnable, so a caller can report the
+    width get_spark builds — `local[resolve_cpus()]` when no external
+    master is set."""
     return cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
 
 
@@ -73,16 +73,6 @@ def get_spark(
     if not os.environ.get("SPARK_MASTER") and "MASTER" not in os.environ:
         builder = builder.master(f"local[{cpus}]")
 
-    # Diagnostics hook (VERDICT r07 next #4): SPARK_GRAFT_GC_LOG=<path>
-    # turns on unified JVM GC logging for the local driver JVM so wall-time
-    # outliers can be correlated with collector pauses. No effect unless set.
-    gc_log = os.environ.get("SPARK_GRAFT_GC_LOG")
-    if gc_log:
-        builder = builder.config(
-            "spark.driver.extraJavaOptions",
-            f"-Xlog:gc*:file={gc_log}:time,uptime",
-        )
-
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
 
@@ -98,12 +88,9 @@ def get_spark(
     # mapInPandas at session build (~1-2 s) plus ~4 GB RSS of resident
     # workers at local[32]. SPARK_GRAFT_NO_PREWARM=1 disables. On a real
     # cluster (non-local master) long-lived executors amortize the
-    # transient across the app, so the default is OFF there;
-    # SPARK_GRAFT_PREWARM=1 forces it on.
-    if not os.environ.get("SPARK_GRAFT_NO_PREWARM") and (
-        spark.sparkContext.master.startswith("local")
-        or os.environ.get("SPARK_GRAFT_PREWARM")
-    ):
+    # transient across the app, so it is OFF there.
+    is_local = spark.sparkContext.master.startswith("local")
+    if is_local and not os.environ.get("SPARK_GRAFT_NO_PREWARM"):
         # best-effort: the prewarm is an optimization, and session BUILD
         # must not fail because of it (e.g. the parquet round-trip in a
         # read-only / full-tmp environment)
@@ -146,44 +133,6 @@ def _warm_jvm_infra(spark: SparkSession) -> None:
 # getOrCreate() hands the same session back to every get_spark call, and the
 # prewarm job must run once per session, not once per call
 _PREWARMED: set = set()
-
-# post-prewarm first-draw bound (VERDICT r10 #3): with the session prewarm
-# in place, a fresh session's FIRST wide Pandas-UDF draw carries only
-# query-specific codegen compile — measured 2.24x the steady median
-# (PREWARM_PROBE.json). Past this factor the pool cold start is back (e.g.
-# a prewarm bypass regression like the SPARK_GRAFT_NO_PREWARM leak the r10
-# self-review caught), and the probe must fail red instead of surfacing as
-# bench mystery-outliers rounds later.
-PREWARM_FIRST_DRAW_MAX_X = 3.0
-
-
-def prewarm_first_draw_verdict(draws: list) -> dict:
-    """Threshold rule for the fresh-session first-draw probe
-    (tools/prewarm_probe.py): given N consecutive draws of a Pandas-UDF
-    query on a get_spark-built session, the probe PASSES when the first
-    draw is <= PREWARM_FIRST_DRAW_MAX_X times the median of the later
-    draws AND no draw anywhere exceeds that bound (a mid-run 3x spike
-    means the pool shrank/respawned mid-session, or load arrived — either
-    way the reading is not evidence of a healthy prewarm). Pure so the
-    rule is pytest-pinned without a Spark session."""
-    if len(draws) < 3:
-        return {"passed": None, "reason": "need >= 3 draws for a median"}
-    rest = sorted(draws[1:])
-    med = rest[len(rest) // 2]
-    if med <= 0:
-        return {"passed": None, "reason": "non-positive steady median"}
-    first_x = round(draws[0] / med, 2)
-    outliers = [
-        round(d, 4) for d in draws if d > PREWARM_FIRST_DRAW_MAX_X * med
-    ]
-    return {
-        "passed": first_x <= PREWARM_FIRST_DRAW_MAX_X and not outliers,
-        "median_of_rest": med,
-        "first_over_median": first_x,
-        "max_x": PREWARM_FIRST_DRAW_MAX_X,
-        "outliers_3x": outliers,
-    }
-
 
 def prewarm_python_workers(spark: SparkSession, partitions: int | None = None) -> bool:
     """Grow the session's Python worker pool to full width, once.

@@ -156,16 +156,13 @@ def state_partitions(spark: SparkSession, n: int):
 # are held until the watermark closes the window) — no drain here uses it,
 # and any future one must pass skip_nodata=False. Scoped per start like
 # state_partitions; a cluster streaming job with explicit checkpoints
-# never enters these drain helpers. SPARK_GRAFT_KEEP_NODATA=1 restores
-# Spark's default for A/B measurement.
+# never enters these drain helpers.
 _NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 @contextmanager
 def _maybe_skip_nodata(spark: SparkSession, skip: bool):
-    import os
-
-    if not skip or os.environ.get("SPARK_GRAFT_KEEP_NODATA"):
+    if not skip:
         yield
         return
     with _session_conf(spark, _NODATA_CONF, "false"):
